@@ -91,15 +91,7 @@ object Bench {
     // every JSON artifact this main writes
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.local(LocalSpark.cpus)
     graft.expr.gf.registerAll(spark)
 
     val sf = SparkEntry.sfOf(sfDir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Extra measurement main (guide §1.4) — NOT part of the driver contract:
   * times individual queries in isolation with a noop sink (every column of
   * every row computed, no output cost) and labelled jobs, so one query can
@@ -17,16 +15,8 @@ object BenchExtra {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.local(LocalSpark.cpus)
     graft.expr.gf.registerAll(spark)
     SparkEntry.prebuild(spark, sfDir)
     val wanted =

@@ -23,26 +23,20 @@ object ScalingBench {
       Bench.northRulePipeline(spark, sf)
     else Bench.headlinePipeline(spark, sf)
 
-  private def once(master: String, cores: Int, sf: Double, warm: Boolean): (Double, Long) = {
-    val spark = SparkSession.builder()
-      .master(master)
-      // 4 waves of tasks per core + 16 MB scan splits: a single straggler
-      // task then idles a core for 1/4 wave instead of a whole stage tail
-      .config("spark.sql.shuffle.partitions", cores * 4)
-      .config("spark.sql.files.maxPartitionBytes", (16 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private def once(cores: Int, sf: Double, warm: Boolean): (Double, Long) = {
+    // 4 waves of tasks per core + 16 MB scan splits: a single straggler
+    // task then idles a core for 1/4 wave instead of a whole stage tail
+    val spark = LocalSpark.local(cores,
+      "spark.sql.shuffle.partitions" -> (cores * 4).toString,
+      "spark.sql.files.maxPartitionBytes" -> (16 * 1024 * 1024).toString,
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true")
     graft.sources.DocStore.ensure(spark, sf)
     if (warm) pipeline(spark, sf) // JIT + page cache
     val t0 = System.nanoTime()
     val (n, _) = pipeline(spark, sf)
     val sec = (System.nanoTime() - t0) / 1e9
     spark.stop()
-    println(f"[scaling] $master: $sec%.3f s")
+    println(f"[scaling] local[$cores]: $sec%.3f s")
     (sec, n)
   }
 
@@ -56,7 +50,7 @@ object ScalingBench {
     require(reps >= 1 && n >= 1, s"need reps >= 1 and cores >= 1, got reps=$reps cores=$n")
     var docs = 0L
     val times = (1 to reps).map { c =>
-      val (t, d) = once(s"local[$n]", n, sf, warm = c == 1)
+      val (t, d) = once(n, sf, warm = c == 1)
       docs = d
       t
     }
@@ -73,8 +67,8 @@ object ScalingBench {
 
     var docs = 0L
     val pairs = (1 to cycles).map { c =>
-      val (tN, d) = once(s"local[$n]", n, sf, warm = c == 1)
-      val (t4N, _) = once(s"local[${4 * n}]", 4 * n, sf, warm = c == 1)
+      val (tN, d) = once(n, sf, warm = c == 1)
+      val (t4N, _) = once(4 * n, sf, warm = c == 1)
       docs = d
       (tN, t4N)
     }

@@ -66,16 +66,6 @@ object DocPipeline {
       .withColumn("lon", gf.geocode_lon(col("region"), col("text")))
       .withColumn("cell7", gf.grid_cell(col("lat"), col("lon"), 7))
 
-  /** The explode + window formulation of docAnchors (kept for parity tests —
-    * demonstrates the window operator; 100x slower shuffle shape). */
-  def docAnchorsViaWindow(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy("doc_id").orderBy("offset")
-    geocodedSpans(docs)
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
-      .drop("rn")
-  }
-
   /** Media spans with parsed tile ids (media_ref "tile/z/x/y"). */
   def mediaSpans(docs: DataFrame): DataFrame =
     explodeSpans(docs)

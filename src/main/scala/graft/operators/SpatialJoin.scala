@@ -52,13 +52,5 @@ object SpatialJoin {
       .drop("cell")
   }
 
-  /** Salted repartition for hot cells (Moscow/SPb skew): spread each cell's
-    * rows over `salt` sub-partitions before a cell-keyed shuffle op. */
-  def saltedByCell(points: DataFrame, res: Int, salt: Int): DataFrame =
-    points
-      .withColumn("cell", gf.grid_cell(col("lat"), col("lon"), res))
-      .withColumn("salt", pmod(hash(col("lat"), col("lon")), lit(salt)))
-      .repartition(col("cell"), col("salt"))
-
   def minCellDimDeg(res: Int): Double = math.min(GridCell.cellW(res), GridCell.cellH(res))
 }

@@ -414,12 +414,4 @@ object DumpJob {
     import scala.jdk.CollectionConverters._
     files.asScala.toSeq.sorted
   }
-
-  /**
-   * Executor-parallel region_tree dump for one region-partitioned table
-   * (kept as the single-table convenience over writeParallel).
-   */
-  def regionTreeParallel(spark: SparkSession, df: DataFrame, table: String,
-      outPath: String, cfg: Config): Seq[String] =
-    writeParallel(spark, Seq(table -> df), outPath, cfg.copy(mode = RegionTree))
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.Parity
+import graft.Parity.{nA, nB, symDiff, total}
 import graft.expr.gf
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -127,23 +129,20 @@ object DeltaStream {
       }
 
       val outPath = root.resolve("store").toString
-      // state-store sizing (r6): dropDuplicatesWithinWatermark creates one
+      // state-store sizing: dropDuplicatesWithinWatermark creates one
       // state-store instance PER shuffle partition per micro-batch, each
-      // with its own delta + commit files — at the session's 32 partitions
-      // that is 32 store lifecycles per batch for a 200-row fixture, pure
-      // fixed overhead. Sized DOWN to the fixture for the duration of the
-      // streaming query only (restored right after): the production
-      // streaming operators (dedupedChanges/writeToStore) take whatever the
-      // session sets — nothing here hard-codes a local core count.
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.min(prevParts.toInt, 4).toString)
-      try {
-        val q = writeToStore(
-          dedupedChanges(readDeltaDrops(spark, watch.toString)),
-          outPath, root.resolve("ckpt").toString).start()
-        try q.processAllAvailable() finally q.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      // with its own delta + commit files — pure fixed overhead for a
+      // 200-row fixture. The streaming query runs in its own session with
+      // the partition count capped at 4, so the caller's session conf is
+      // never touched; the production streaming operators
+      // (dedupedChanges/writeToStore) take whatever their session sets.
+      val streaming = spark.newSession()
+      streaming.conf.set("spark.sql.shuffle.partitions",
+        math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, 4).toString)
+      val q = writeToStore(
+        dedupedChanges(readDeltaDrops(streaming, watch.toString)),
+        outPath, root.resolve("ckpt").toString).start()
+      try q.processAllAvailable() finally q.stop()
 
       // explicit schema on BOTH reads: partition-dir inference would corrupt
       // the zero-padded region key ("01" -> 1)
@@ -153,26 +152,12 @@ object DeltaStream {
       val batch = spark.read.schema(deltaDdl).parquet(watch.toString)
         .dropDuplicates("change_id")
         .select(cols.head, cols.tail: _*)
-      // all three parity numbers out of ONE job (r6; previously 2 caches +
-      // 4 count actions): per-side MULTIPLICITY counts grouped by the full
-      // row, full-outer joined, then n_diff = Σ|cnt_s − cnt_b| — exactly
-      // the two-sided multiset exceptAll arithmetic for ANY multiplicities.
-      // Deliberately NOT a plain row-level join: stream-side uniqueness per
+      // multiset parity over whole rows: stream-side uniqueness per
       // change_id is part of what this harness VERIFIES (a re-delivered
-      // change surviving the watermarked dedupe must surface as n_diff>0,
+      // change surviving the watermarked dedupe must surface as n_diff > 0,
       // and n_stream > n_batch), so the counting may not assume it
-      // (round-6 review finding).
-      val statsJoin = stream.groupBy(cols.head, cols.tail: _*)
-        .agg(count(lit(1)).as("cs"))
-        .join(batch.groupBy(cols.head, cols.tail: _*).agg(count(lit(1)).as("cb")),
-          cols, "full_outer")
-        .select(coalesce(col("cs"), lit(0L)).as("cs"),
-          coalesce(col("cb"), lit(0L)).as("cb"))
-        .agg(coalesce(sum(col("cs")), lit(0L)).as("n_stream"),
-          coalesce(sum(col("cb")), lit(0L)).as("n_batch"),
-          coalesce(sum(abs(col("cs") - col("cb"))), lit(0L)).as("n_diff"))
-      graft.PlanCapture.dump("q_stream_batch_parity_stats", statsJoin)
-      val r = statsJoin.head()
+      val r = Parity.stats("q_stream_batch_parity_stats", stream, batch, cols)(
+        total(nA).as("n_stream"), total(nB).as("n_batch"), total(symDiff).as("n_diff")).head()
       (r.getLong(0), r.getLong(1), r.getLong(2))
     } finally {
       // drops + store + checkpoint are throwaway fixtures — repeated runs

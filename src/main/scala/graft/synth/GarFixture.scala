@@ -83,45 +83,3 @@ object GarFixtureMain {
     println(s"fixture tree written to $out")
   }
 }
-
-/** Large single-table fixture for the reference-vs-engine throughput race
-  * (tools/ref_throughput.sh): streams `n` deterministic ADDR_OBJ rows per
-  * region to disk without materialising the document. */
-object GarFixtureBig {
-  def write(root: String, regions: Seq[String], rowsPerRegion: Int): String = {
-    import graft.model.{SchemaRegistry, XsdSchema}
-    val entity = SchemaRegistry.entityOf("ADDR_OBJ")
-    val schema = SchemaRegistry.schemaOf("ADDR_OBJ")
-    Files.createDirectories(Paths.get(root))
-    Files.write(Paths.get(root, s"AS_${entity}_2_fixture.xsd"),
-      XsdSchema.render(entity).getBytes(StandardCharsets.UTF_8))
-    for (region <- regions) {
-      Files.createDirectories(Paths.get(root, region))
-      val w = Files.newBufferedWriter(
-        Paths.get(root, region, "AS_ADDR_OBJ_2_fixture.xml"), StandardCharsets.UTF_8)
-      try {
-        w.write("<?xml version=\"1.0\" encoding=\"utf-8\"?>\n<ADDRESSOBJECTS>\n")
-        var i = 0L
-        val chunk = 5000
-        while (i < rowsPerRegion) {
-          val upTo = math.min(rowsPerRegion.toLong, i + chunk)
-          val rows = (i until upTo).map { r =>
-            org.apache.spark.sql.Row.fromSeq(schema.fields.zipWithIndex.map {
-              case (f, fi) => GarGen.value(f, "ADDR_OBJ", region, r, fi)
-            }.toSeq)
-          }
-          val body = GarXml.toXml(rows, schema, "X", "OBJECT")
-          // strip the per-chunk document wrapper, keep the rows
-          w.write(body.linesWithSeparators.filter(_.startsWith("  <")).mkString)
-          i = upTo
-        }
-        w.write("</ADDRESSOBJECTS>\n")
-      } finally w.close()
-    }
-    root
-  }
-  def main(args: Array[String]): Unit = {
-    val n = if (args.length > 1) args(1).toInt else 200000
-    println("big fixture at " + write(args(0), Seq("01", "77"), n))
-  }
-}

@@ -3,6 +3,7 @@ package graft
 import graft.operators.{DocPipeline, KnnJoin, SpatialJoin}
 import graft.sources.DocStore
 import graft.synth.DataGen
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -66,11 +67,22 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got == Seq("t1", "t2", "t3"))
   }
 
+  /** The explode + window formulation of `DocPipeline.docAnchors`: the
+    * reference the shuffle-free version is checked against (its
+    * shuffle-by-doc_id of every span row is ~100x slower). */
+  private def docAnchorsViaWindow(docs: org.apache.spark.sql.DataFrame) = {
+    val w = Window.partitionBy("doc_id").orderBy("offset")
+    DocPipeline.geocodedSpans(docs)
+      .withColumn("rn", row_number().over(w))
+      .where(col("rn") === 1)
+      .drop("rn")
+  }
+
   test("shuffle-free anchors equal the window formulation") {
     val fast = DocPipeline.docAnchors(docs)
       .select($"doc_id", $"text", $"offset", $"lat", $"lon").collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getDouble(3), r.getDouble(4))).toSet
-    val slow = DocPipeline.docAnchorsViaWindow(docs)
+    val slow = docAnchorsViaWindow(docs)
       .select($"doc_id", $"text", $"offset", $"lat", $"lon").collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getDouble(3), r.getDouble(4))).toSet
     assert(fast == slow && fast.nonEmpty)
@@ -92,13 +104,6 @@ class OperatorsSpec extends AnyFunSuite {
       .count()
     assert(mismatches == 0)
     assert(rebuilt.count() == docs.count())
-  }
-
-  test("salting spreads a hot cell over the requested sub-partitions") {
-    val pts = DocPipeline.docAnchors(docs).select($"doc_id", $"lat", $"lon")
-    val salted = SpatialJoin.saltedByCell(pts, res = 7, salt = 8)
-    assert(salted.select("salt").distinct().count() == 8)
-    assert(salted.count() == pts.count())
   }
 
   test("flagship entry returns rows") {

@@ -7,16 +7,9 @@ import org.apache.spark.sql.SparkSession
   * interpreted path. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = LocalSpark.local(4,
+      "spark.app.name" -> "graft-test",
+      "spark.sql.codegen.fallback" -> "false")
     graft.expr.gf.registerAll(s)
     s
   }
